@@ -155,9 +155,7 @@ object ChangeFeed {
       import spark.implicits._
       val pathTs = insertMarkers.toSeq
         .map { case (m, ts) => (m.path, ts) }.toDF("_cf_path", CommitTsCol)
-      parts += spark.read.schema(snap.schema.toStructType)
-        .parquet(insertMarkers.map(_._1).toSeq
-          .map(m => s"${table.root}/${m.path}"): _*)
+      parts += table.readFiles(snap, insertMarkers.map(_._1).toSeq)
         .withColumn("_cf_path", table.relPathCol)
         .join(broadcast(pathTs), Seq("_cf_path"))
         .drop("_cf_path")
@@ -227,9 +225,9 @@ object ChangeFeed {
     // report exactly like a re-mark (dv compaction's content-preserving
     // re-lists have an alive prior and stay silent). One path can carry
     // several commit ts (created, retired, revived in one window).
-    val markFileTs: Seq[(String, Long)] = {
+    val markFileTs: Seq[(FileMarker, Long)] = {
       var prior = Map.empty[String, FileMarker]
-      val out = Seq.newBuilder[(String, Long)]
+      val out = Seq.newBuilder[(FileMarker, Long)]
       dvLogs.foreach { lf =>
         val (ts, merged) = IceLogIO.logFileInfo(lf)
         val meta = LogMetadata.fromJson(dvFetched(lf)(0))
@@ -240,7 +238,7 @@ object ChangeFeed {
           if (m.tombstone.isEmpty &&
               (if (merged) prior.get(m.path).exists(_.tombstone.nonEmpty)
                else prior.get(m.path).forall(_.tombstone.nonEmpty)))
-            out += ((m.path, ts))
+            out += ((m, ts))
         }
         if (!inWindow && (ts <= sinceTs || meta.cleanedHorizon.nonEmpty))
           markers.foreach(m => prior = prior.updated(m.path, m))
@@ -254,13 +252,11 @@ object ChangeFeed {
     val dvSchema = dv.snapshot(maxTs + 1).schema.toStructType
 
     import spark.implicits._
-    val fileTs = markFileTs.toDF("_mf", "_mts")
+    val fileTs = markFileTs.map { case (m, ts) => (m.path, ts) }.toDF("_mf", "_mts")
     // one scan over every window mark file (distinct paths — the ts join
     // fans a revived file out to each of its kill commits): one row per
     // (pair, killing commit)
-    val markEvents = spark.read.schema(dvSchema)
-      .parquet(markFileTs.map { case (p, _) => s"${dv.root}/$p" }
-        .distinct: _*)
+    val markEvents = dv.scanMarkers(dvSchema, markFileTs.map(_._1).distinctBy(_.path))
       .withColumn("_mf", dv.relPathCol)
       .join(broadcast(fileTs), Seq("_mf"))
       .select(col("path"), col("row_index"), col("_mts"))
@@ -356,18 +352,15 @@ object ChangeFeed {
     // precedes it). Driver-side metadata folds, file-count scale.
     val pathTs = fresh.select("path", "_mts").distinct()
       .collect().map(r => (r.getString(0), r.getLong(1)))
-    val aliveAt = scala.collection.mutable.Map.empty[Long, Set[String]]
-    def alive(ts: Long): Set[String] = aliveAt.getOrElseUpdate(
-      ts, table.snapshot(ts + 1).aliveFiles.map(_.path).toSet)
-    val readable = pathTs.filter { case (p, ts) => alive(ts)(p) }
-      .map(_._1).distinct
+    val aliveAt = scala.collection.mutable.Map.empty[Long, Map[String, FileMarker]]
+    def alive(ts: Long): Map[String, FileMarker] = aliveAt.getOrElseUpdate(
+      ts, table.snapshot(ts + 1).aliveFiles.map(m => m.path -> m).toMap)
+    val readable = pathTs.toSeq.flatMap { case (p, ts) => alive(ts).get(p) }
+      .distinctBy(_.path)
     if (readable.isEmpty) return Seq.empty // all re-marks
 
     val dataCols = snap.schema.toStructType.fieldNames.toSeq
-    val rows = spark.read.schema(snap.schema.toStructType)
-      .parquet(readable.map(p => s"${table.root}/$p").toIndexedSeq: _*)
-      .withColumn("_dv_path", table.relPathCol)
-      .withColumn("_dv_row", col("_metadata.row_index"))
+    val rows = table.withPositions(table.readFiles(snap, readable))
       .join(fresh.select(col("path").as("_dv_path"),
         col("row_index").as("_dv_row"), col("_mts")), Seq("_dv_path", "_dv_row"))
       .select(dataCols.map(c => col(s"`$c`")) :+ col("_mts"): _*)
@@ -419,8 +412,7 @@ object ChangeFeed {
     import spark.implicits._
     val events = scala.collection.mutable.Buffer.empty[DataFrame]
     val parts = dead.groupBy(_._2).toSeq.sortBy(_._1).map { case (ts, files) =>
-      val retired = spark.read.schema(dvSchema)
-        .parquet(files.toSeq.map { case (m, _) => s"${dv.root}/${m.path}" }: _*)
+      val retired = dv.scanMarkers(dvSchema, files.toSeq.map(_._1))
         .select("path", "row_index").distinct()
       // (a) pairs still covered by an alive mark at ts stay dead
       val uncovered = dv.trySnapshot(ts + 1)
@@ -432,8 +424,8 @@ object ChangeFeed {
       // (b) only rows of files alive in main at ts. Driver-side metadata
       // fold; the allowed-path set joins as a broadcast frame (file-
       // count scale — an isin literal list would not survive 10^5 files)
-      val aliveMain = table.snapshot(ts + 1).aliveFiles.map(_.path).toSet
-      val allowed = aliveMain.toSeq.toDF("path")
+      val aliveMain = table.snapshot(ts + 1).aliveFiles.map(m => m.path -> m).toMap
+      val allowed = aliveMain.keys.toSeq.toDF("path")
       val wanted = uncovered.join(broadcast(allowed), Seq("path"))
         .localCheckpoint()
       events += wanted.select(col("path"), col("row_index"),
@@ -445,10 +437,7 @@ object ChangeFeed {
         table.readFiles(snap, Seq.empty)
           .withColumn(ChangeTypeCol, lit("insert"))
           .withColumn(CommitTsCol, lit(ts)).limit(0)
-      else spark.read.schema(snap.schema.toStructType)
-        .parquet(paths.map(p => s"${table.root}/$p").toIndexedSeq: _*)
-        .withColumn("_dv_path", table.relPathCol)
-        .withColumn("_dv_row", col("_metadata.row_index"))
+      else table.withPositions(table.readFiles(snap, paths.toSeq.map(aliveMain)))
         .join(wanted.select(col("path").as("_dv_path"),
           col("row_index").as("_dv_row")), Seq("_dv_path", "_dv_row"))
         .select(dataCols.map(c => col(s"`$c`")): _*)

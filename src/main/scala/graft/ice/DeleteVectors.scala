@@ -51,10 +51,7 @@ object DeleteVectors {
     if (files.isEmpty) return main.readFiles(snap, files)
       .withColumn("_dv_path", lit(null).cast("string"))
       .withColumn("_dv_row", lit(null).cast("bigint"))
-    main.spark.read.schema(snap.schema.toStructType)
-      .parquet(files.map(m => s"${main.root}/${m.path}"): _*)
-      .withColumn("_dv_path", main.relPathCol)
-      .withColumn("_dv_row", col("_metadata.row_index"))
+    main.withPositions(main.readFiles(snap, files))
   }
 
   /** Mark every row matching `cond` as deleted: one filtered scan of the
@@ -149,12 +146,9 @@ object DeleteVectors {
         implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
         Await.result(Future.traverse(targets) { m =>
           Future {
-            val kept = main.spark.read.schema(snap.schema.toStructType)
-              .parquet(s"${main.root}/${m.path}")
-              .withColumn("_dv_row", col("_metadata.row_index"))
-              .join(broadcast(deletes.where(col("path") === m.path)
-                .select(col("row_index").as("_dv_row"))), Seq("_dv_row"), "left_anti")
-              .drop("_dv_row")
+            val kept = main.readFileDropping(snap.schema.toStructType, m,
+              Some(broadcast(deletes.where(col("path") === m.path)
+                .select(col("path").as("_dv_path"), col("row_index").as("_dv_row")))))
             main.writeSingleFileFor(kept, main.partitionOf(m.path))
           }
         }, Duration.Inf)

@@ -1,5 +1,6 @@
 package graft.ice
 
+import graft.plans.IceFileIndex
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,8 +64,8 @@ final case class CleanupResult(
   * @param statsColumn beyond-reference data skipping: record each written
   *   file's [min, max] of this column (typically the leading sort key) in
   *   its log marker, read once from the parquet footer at write time.
-  *   [[IceTable.filesInStatsRange]] / [[IceTable.readStatsRange]] then
-  *   prune files from the log alone — at 100 TB a range query on the
+  *   [[IceTable.filesInStatsRange]] and the SQL path (`IceFileIndex`)
+  *   then prune files from the log alone — at 100 TB a range query on the
   *   cluster key plans with ZERO object-store reads instead of listing
   *   and footer-probing 10⁵ files. Stats-less markers (older writers)
   *   are conservatively kept.
@@ -406,31 +407,31 @@ final class IceTable(
   def readFiles(snap: IceSnapshot, markers: Seq[FileMarker]): DataFrame =
     scanMarkers(snap.schema.toStructType, markers)
 
-  /** Plan a parquet scan over an EXPLICIT marker list with ZERO file
-    * listing: paths and exact sizes come from the log markers (recorded
-    * from `getFileStatus` at commit — the contract the catalog relation
-    * already trusts), so neither a LIST/stat round-trip nor
-    * DataFrameReader's distributed listing job ever runs. That job costs
-    * one task PER FILE past 32 paths, each re-deserializing the full
-    * Hadoop conf (~15-20 ms CPU/file measured — an 83-task job ahead of
-    * EVERY lineitem-fixture query, 2000 tasks ≈ 35 CPU-s ahead of the
-    * 2000-file compaction read). Semantics match
-    * `spark.read.schema(schema).parquet(paths: _*)`: same data schema (no
-    * partition columns appended), same pushdown/pruning, same `_metadata`
-    * columns — only the listing is gone. */
+  /** Plan a parquet scan over an EXPLICIT marker list through the one
+    * [[graft.plans.IceFileIndex]] (no file listing; see there). Semantics
+    * match DataFrameReader's parquet read of the same paths under
+    * `schema`: same data schema (no partition columns appended), same
+    * pushdown, same `_metadata` columns, plus the index's log-side stats
+    * pruning. DV-blind: the relation is tagged
+    * [[graft.plans.IceDvOverlay.DvApplied]] so the overlay rule leaves it
+    * alone. */
   private[graft] def scanMarkers(
       schema: StructType, markers: Seq[FileMarker]): DataFrame =
     if (markers.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else spark.baseRelationToDataFrame(
-      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        location = new graft.plans.MarkerFileIndex(qualifiedRoot, markers),
-        partitionSchema = StructType(Nil),
-        dataSchema = schema,
-        bucketSpec = None,
-        fileFormat =
-          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-        options = Map.empty)(spark))
+    else {
+      val rel = org.apache.spark.sql.execution.datasources.LogicalRelation(
+        org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+          location = new IceFileIndex(this, markers, schema, StructType(Nil)),
+          partitionSchema = StructType(Nil),
+          dataSchema = schema,
+          bucketSpec = None,
+          fileFormat =
+            new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+          options = Map.empty)(spark))
+      rel.setTagValue(graft.plans.IceDvOverlay.DvApplied, true)
+      org.apache.spark.sql.graft.PlanBridge.ofRows(spark, rel)
+    }
 
   /** This table's root as the filesystem qualifies it — the exact prefix
     * `_metadata.file_path` carries for every file under the root. */
@@ -538,16 +539,41 @@ final class IceTable(
   private[ice] def readFilesApplyingDeletes(
       snap: IceSnapshot, markers: Seq[FileMarker],
       maxTs: Long = Long.MaxValue): DataFrame =
-    dvPositions(markers.map(_.path), maxTs) match {
-      case None => readFiles(snap, markers)
-      case Some(del) =>
-        if (markers.isEmpty) readFiles(snap, markers)
-        else scanMarkers(snap.schema.toStructType, markers)
-          .withColumn("_dv_path", relPathCol)
-          .withColumn("_dv_row", col("_metadata.row_index"))
-          .join(del, Seq("_dv_path", "_dv_row"), "left_anti")
-          .drop("_dv_path", "_dv_row")
+    withDeletesApplied(readFiles(snap, markers), markers, maxTs)
+
+  /** `scan`, a plain scan of `markers`, with this table's deletion vectors
+    * pinned at `maxTs` applied — `scan` itself when none apply. The dv
+    * side is position-pair sized, so AQE broadcasts it on its own, and a
+    * pathological dv may still sort-merge instead of OOMing. */
+  private[graft] def withDeletesApplied(
+      scan: DataFrame, markers: Seq[FileMarker], maxTs: Long): DataFrame =
+    if (markers.isEmpty) scan
+    else dvPositions(markers.map(_.path), maxTs) match {
+      case None => scan
+      case del => dropDeleted(withPositions(scan), del).drop("_dv_path", "_dv_row")
     }
+
+  /** `scan` plus the root-relative `_dv_path` / `_dv_row` position columns
+    * the deletion-vector anti-join keys on. A single-file scan passes its
+    * marker path instead of parsing it out of `_metadata.file_path`. */
+  private[ice] def withPositions(
+      scan: DataFrame, path: Option[String] = None): DataFrame =
+    scan.withColumn("_dv_path", path.fold(relPathCol)(lit(_)))
+      .withColumn("_dv_row", col("_metadata.row_index"))
+
+  /** THE deletion-vector anti-join: the rows of `positioned` (a scan
+    * carrying [[withPositions]] columns) whose position is not in `del`,
+    * a [[dvPositions]]-shaped frame; identity when None. */
+  private[ice] def dropDeleted(
+      positioned: DataFrame, del: Option[DataFrame]): DataFrame =
+    del.fold(positioned)(positioned.join(_, Seq("_dv_path", "_dv_row"), "left_anti"))
+
+  /** One file under `schema` minus the positions in `del` — the source
+    * of every per-file copy-on-write rewrite. */
+  private[ice] def readFileDropping(
+      schema: StructType, m: FileMarker, del: Option[DataFrame]): DataFrame =
+    dropDeleted(withPositions(scanMarkers(schema, Seq(m)), Some(m.path)), del)
+      .drop("_dv_path", "_dv_row")
 
   /** A18 `get_files`: alive markers whose partition string is within the
     * lexicographic [lo, hi] range (reference: ch/user_scripts/main.go:44-73).
@@ -584,19 +610,9 @@ final class IceTable(
     * configured stats column this is the full alive list. Pure log-side
     * metadata work: no file is listed or opened.
     */
-  def filesInStatsRange(snap: IceSnapshot, lo: String, hi: String): Seq[FileMarker] = {
-    if (cfg.statsColumn.isEmpty) return snap.aliveFiles
-    val numeric = cfg.statsColumn.flatMap(c => snap.schema.pairs.toMap.get(c))
-      .exists(IceTable.statsTypeIsNumeric)
-    snap.aliveFiles.filter(_.stats.forall { case (mn, mx) =>
-      IceTable.statsIntersects(numeric, mn, mx, Some(lo), Some(hi))
-    })
-  }
-
-  def readStatsRange(lo: String, hi: String, maxTs: Long = Long.MaxValue): DataFrame = {
-    val snap = snapshot(maxTs)
-    readFilesApplyingDeletes(snap, filesInStatsRange(snap, lo, hi), maxTs)
-  }
+  def filesInStatsRange(snap: IceSnapshot, lo: String, hi: String): Seq[FileMarker] =
+    filesMatchingStats(snap,
+      cfg.statsColumn.map(_ -> (Some(lo), Some(hi))).toMap)
 
   /** A marker's recorded [min, max] for any stats column (primary or
     * additional), or None (un-prunable on that column). */
@@ -612,25 +628,24 @@ final class IceTable(
     * dimension, not just the leading sort key. */
   def filesMatchingStats(
       snap: IceSnapshot,
+      windows: Map[String, (Option[String], Option[String])]): Seq[FileMarker] =
+    filesMatchingStats(snap.aliveFiles, snap.schema.toStructType, windows)
+
+  /** The one stats-interval filter, shared with the optimizer-side
+    * skipping in [[graft.plans.IceFileIndex]]: `markers` whose [min, max]
+    * on each windowed column of `schema` can intersect its window. */
+  private[graft] def filesMatchingStats(
+      markers: Seq[FileMarker], schema: StructType,
       windows: Map[String, (Option[String], Option[String])]): Seq[FileMarker] = {
-    if (windows.isEmpty) return snap.aliveFiles
-    val types = snap.schema.pairs.toMap
-    val numeric = windows.keys.map(c =>
-      c -> types.get(c).exists(IceTable.statsTypeIsNumeric)).toMap
-    snap.aliveFiles.filter { m =>
+    if (windows.isEmpty) return markers
+    val numeric = windows.keys.map(c => c -> IceTable.statsNumeric(schema, c)).toMap
+    markers.filter { m =>
       windows.forall { case (c, (lo, hi)) =>
         markerStats(m, c).forall { case (mn, mx) =>
           IceTable.statsIntersects(numeric(c), mn, mx, lo, hi)
         }
       }
     }
-  }
-
-  def readMatchingStats(
-      windows: Map[String, (Option[String], Option[String])],
-      maxTs: Long = Long.MaxValue): DataFrame = {
-    val snap = snapshot(maxTs)
-    readFilesApplyingDeletes(snap, filesMatchingStats(snap, windows), maxTs)
   }
 
   /** Incremental (CDC-style) file listing: markers committed by *insert*
@@ -1260,7 +1275,7 @@ final class IceTable(
     // assigning it would be silently dropped at write
     trySnapshot(Long.MaxValue).foreach { s =>
       val dataLc = s.schema.pairs.iterator.map(_._1.toLowerCase).toSet
-      val virt = partitionKeyNames(s).filterNot(k => dataLc(k.toLowerCase))
+      val virt = IceFileIndex.partitionKeys(this, s).filterNot(k => dataLc(k.toLowerCase))
       val touched = assignments.map(_._1)
         .filter(a => virt.exists(_.equalsIgnoreCase(a)))
       require(touched.isEmpty,
@@ -1343,20 +1358,15 @@ final class IceTable(
     // mutateAffected): a rewrite re-positions survivors, so unapplied
     // marks would resurrect their rows
     val del = snapOpt.flatMap(s => dvPositions(s.aliveFiles.map(_.path)))
-    def applyDv(df: DataFrame): DataFrame = del.fold(df)(d =>
-      df.join(d.withColumnRenamed("_dv_path", "_p").withColumnRenamed("_dv_row", "_r"),
-        Seq("_p", "_r"), "left_anti"))
     val (targets, replaced, schema) = snapOpt match {
       case None => (Seq.empty[FileMarker], 0L, srcStaged.schema)
       case Some(snap) =>
         val sch = snap.schema.toStructType
         // the metadata columns must project off the SCAN, before any join
         // hides them
-        val scan = applyDv(scanMarkers(sch, snap.aliveFiles)
-          .withColumn("_p", relPathCol)
-          .withColumn("_r", col("_metadata.row_index")))
+        val scan = dropDeleted(withPositions(scanMarkers(sch, snap.aliveFiles)), del)
         val hits = scan.join(srcKeys, keyCols, "left_semi")
-          .groupBy(col("_p"))
+          .groupBy(col("_dv_path"))
           .agg(count(lit(1)).as("_n"))
           .collect()
         val affected = hits.map(_.getString(0)).toSet
@@ -1370,10 +1380,7 @@ final class IceTable(
       implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
       Await.result(Future.traverse(targets) { m =>
         Future {
-          val kept = applyDv(scanMarkers(schema, Seq(m))
-              .withColumn("_p", lit(m.path))
-              .withColumn("_r", col("_metadata.row_index")))
-            .drop("_p", "_r")
+          val kept = readFileDropping(schema, m, del)
             .join(srcKeys, keyCols, "left_anti")
           val out = writeSingleFileFor(kept, partitionOf(m.path))
           // fully-emptied file: tombstone only, never an alive empty file
@@ -1420,14 +1427,9 @@ final class IceTable(
     if (snap.aliveFiles.isEmpty) return 0L
     val schema = snap.schema.toStructType
     val del = dvPositions(snap.aliveFiles.map(_.path))
-    def applyDv(df: DataFrame): DataFrame = del.fold(df)(d =>
-      df.join(d.withColumnRenamed("_dv_path", "_p").withColumnRenamed("_dv_row", "_r"),
-        Seq("_p", "_r"), "left_anti"))
-    val scan = applyDv(scanMarkers(schema, snap.aliveFiles)
-      .withColumn("_p", relPathCol)
-      .withColumn("_r", col("_metadata.row_index")))
+    val scan = dropDeleted(withPositions(scanMarkers(schema, snap.aliveFiles)), del)
     val hits = scan.join(srcKeys, keyCols, "left_semi")
-      .groupBy(col("_p")).agg(count(lit(1)).as("_n"))
+      .groupBy(col("_dv_path")).agg(count(lit(1)).as("_n"))
       .collect() // file-count scale: one row per AFFECTED file
     if (hits.isEmpty) return 0L
     val deleted = hits.map(_.getLong(1)).sum
@@ -1439,10 +1441,7 @@ final class IceTable(
       implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
       Await.result(Future.traverse(targets) { m =>
         Future {
-          val kept = applyDv(scanMarkers(schema, Seq(m))
-              .withColumn("_p", lit(m.path))
-              .withColumn("_r", col("_metadata.row_index")))
-            .drop("_p", "_r")
+          val kept = readFileDropping(schema, m, del)
             .join(srcKeys, keyCols, "left_anti")
           val out = writeSingleFileFor(kept, partitionOf(m.path))
           // fully-emptied file: tombstone only, never an alive empty file
@@ -1476,13 +1475,13 @@ final class IceTable(
     val snap = trySnapshot(Long.MaxValue).getOrElse(return 0L)
     if (snap.aliveFiles.isEmpty) return 0L
     val schema = snap.schema.toStructType
-    val virtKeys = partitionKeyNames(snap)
+    val virtKeys = IceFileIndex.partitionKeys(this, snap)
       .filterNot(k => schema.fieldNames.exists(_.equalsIgnoreCase(k)))
-    // per-row parse from the relative path `_p` — same value semantics as
-    // the catalog scan (raw segment after '=', missing key = "")
+    // per-row parse from the relative path `_dv_path` — same value
+    // semantics as the catalog scan (raw segment after '=', missing key = "")
     def withVirtFromPath(df: DataFrame): DataFrame =
       virtKeys.foldLeft(df)((d, k) => d.withColumn(k, regexp_extract(
-        col("_p"), "(?:^|/)" + java.util.regex.Pattern.quote(k) + "=([^/]*)", 1)))
+        col("_dv_path"), "(?:^|/)" + java.util.regex.Pattern.quote(k) + "=([^/]*)", 1)))
     // exact per-file bind (the file's whole directory is one partition)
     def withVirtFor(df: DataFrame, partition: String): DataFrame = {
       val kv = IceTable.partitionKvOf(partition)
@@ -1493,8 +1492,8 @@ final class IceTable(
     // the log schema drives every read, so a rewritten file whose column
     // type diverged (e.g. SET bigint_col = 'text') would poison the table
     val outSchema = Schema.fromStructType(
-      transform(withVirtFromPath(scan.limit(0).withColumn("_p", lit(""))))
-        .drop("_metadata").drop("_p").drop(virtKeys: _*).schema)
+      transform(withVirtFromPath(scan.limit(0).withColumn("_dv_path", lit(""))))
+        .drop("_metadata").drop("_dv_path").drop(virtKeys: _*).schema)
     val probe = new Schema
     probe.accumulate(
       Schema.fromStructType(schema).columns, Schema.fromStructType(schema).types)
@@ -1504,12 +1503,7 @@ final class IceTable(
     // surviving rows new positions, so unapplied marks would go stale and
     // resurrect their rows)
     val del = dvPositions(snap.aliveFiles.map(_.path))
-    def applyDv(df: DataFrame): DataFrame = del.fold(df)(d =>
-      df.join(d.withColumnRenamed("_dv_path", "_p").withColumnRenamed("_dv_row", "_r"),
-        Seq("_p", "_r"), "left_anti"))
-    val probed = withVirtFromPath(applyDv(scan
-      .withColumn("_p", relPathCol)
-      .withColumn("_r", col("_metadata.row_index"))))
+    val probed = withVirtFromPath(dropDeleted(withPositions(scan), del))
     // one probe pass computes BOTH the per-file match count and the
     // per-file alive total: when the mutation DROPS matched rows
     // (delete), a file whose every alive row matches needs no rewrite at
@@ -1517,7 +1511,7 @@ final class IceTable(
     // until) empties every superseded generation's files, so this turns
     // its CoW from file-count rewrite jobs into one probe + one commit.
     val hits = probed
-      .groupBy(col("_p")).agg(count(when(cond, 1)).as("_n"),
+      .groupBy(col("_dv_path")).agg(count(when(cond, 1)).as("_n"),
         count(lit(1)).as("_t"))
       .where(col("_n") > 0)
       .collect() // file-count scale: one row per AFFECTED file
@@ -1534,11 +1528,9 @@ final class IceTable(
     // caller's one-shot validation pass (e.g. updateWhere's CHECK
     // pre-flight) over the AFFECTED files only, before any rewrite
     // writes a byte
-    precheck.foreach(check => check(withVirtFromPath(applyDv(
-      scanMarkers(schema, targets)
-        .withColumn("_p", relPathCol)
-        .withColumn("_r", col("_metadata.row_index"))))
-      .drop("_p", "_r")))
+    precheck.foreach(check => check(withVirtFromPath(dropDeleted(
+      withPositions(scanMarkers(schema, targets)), del))
+      .drop("_dv_path", "_dv_row")))
     // per-file rewrites fan out on the bounded pool (leaf-only: one Spark
     // job + a rename each), like rewritePartition — serial per-file jobs
     // would make driver wall-clock linear in affected files. A rewrite
@@ -1552,10 +1544,7 @@ final class IceTable(
       implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
       Await.result(Future.traverse(rewriteTargets) { m =>
         Future {
-          val src = applyDv(scanMarkers(schema, Seq(m))
-            .withColumn("_p", lit(m.path))
-            .withColumn("_r", col("_metadata.row_index")))
-            .drop("_p", "_r")
+          val src = readFileDropping(schema, m, del)
           val part = partitionOf(m.path)
           val out = writeSingleFileFor(
             transform(withVirtFor(src, part)).drop(virtKeys: _*), part)
@@ -2663,7 +2652,7 @@ final class IceTable(
       throw new IllegalArgumentException(
         s"DROP PARTITIONS predicate may reference only this table's " +
           s"path-derived partition columns " +
-          s"(${partitionKeyNames(snap).mkString(", ")}); for row-level " +
+          s"(${IceFileIndex.partitionKeys(this, snap).mkString(", ")}); for row-level " +
           "predicates use DELETE"))
     if (matched.isEmpty) return (0, 0)
     val matchSet = matched.toSet
@@ -2718,18 +2707,6 @@ final class IceTable(
     Some(affected.iterator.flatMap(_.rowCount).sum)
   }
 
-  /** Partition key names of a snapshot's marker paths, first-seen order,
-    * bucket routing level excluded (same contract as the catalog scan's
-    * partitionKeys). */
-  private def partitionKeyNames(snap: IceSnapshot): Seq[String] = {
-    val seen = mutable.LinkedHashSet.empty[String]
-    snap.aliveFiles.foreach(m => partitionOf(m.path).split("/").foreach { seg =>
-      val i = seg.indexOf('=')
-      if (i > 0) seen += seg.substring(0, i)
-    })
-    if (cfg.bucketBy.isDefined) (seen - "bkt").toSeq else seen.toSeq
-  }
-
   /** Evaluate `cond` against the snapshot's distinct partition dirs:
     * Some(matching dirs) iff it resolves using ONLY the path-derived
     * partition keys; None otherwise. Value semantics are EXACTLY the
@@ -2746,7 +2723,7 @@ final class IceTable(
     val dirs = snap.aliveFiles.iterator.map(m => partitionOf(m.path))
       .toSeq.distinct.sorted
     if (dirs.isEmpty) return Some(Seq.empty)
-    val keys = partitionKeyNames(snap)
+    val keys = IceFileIndex.partitionKeys(this, snap)
     if (keys.isEmpty) return None
     val refs = org.apache.spark.sql.graft.PlanBridge.eagerExpression(cond)
       .collect {
@@ -3088,9 +3065,12 @@ object IceTable {
     read
   }
 
-  private[graft] def statsTypeIsNumeric(t: String): Boolean =
-    Set("BIGINT", "INTEGER", "SMALLINT", "TINYINT", "DOUBLE", "FLOAT")
-      .contains(t) || t.startsWith("DECIMAL")
+  /** Whether stats on `column` compare numerically: its type in the
+    * scanned schema is numeric. Anything else (absent included) compares
+    * as strings. */
+  private[graft] def statsNumeric(schema: StructType, column: String): Boolean =
+    schema.find(_.name == column)
+      .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
 
   /** The one stats comparator. Numeric values compare as BigDecimal;
     * strings compare as UNSIGNED UTF-8 BYTES — the order parquet's binary
@@ -3108,9 +3088,9 @@ object IceTable {
         b.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     catch { case _: NumberFormatException => None }
 
-  /** Shared stats-interval test for [[IceTable.filesInStatsRange]] and the
-    * optimizer-side skipping in `IceFileIndex`. An unparseable value keeps
-    * the file — skipping must never produce a false negative. */
+  /** The stats-interval test behind [[IceTable.filesMatchingStats]]. An
+    * unparseable value keeps the file — skipping must never produce a
+    * false negative. */
   private[graft] def statsIntersects(
       numeric: Boolean,
       min: String, max: String,

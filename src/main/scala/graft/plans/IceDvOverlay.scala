@@ -16,9 +16,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * (`IceTable.read`, the `graft.` SQL catalog, temp views, and
   * `format("ice")`) agree after a [[graft.ice.DeleteVectors.deleteWhere]].
   *
-  * Relations built by [[IceFileIndex.dataFrame]] apply the overlay
-  * themselves and arrive tagged [[IceDvOverlay.DvApplied]], so the rule
-  * never stacks a second anti-join; the subtree this rule produces embeds
+  * Explicit scans ([[graft.ice.IceTable.scanMarkers]]) are DV-blind by
+  * contract and arrive tagged [[IceDvOverlay.DvApplied]], so the rule
+  * leaves them alone and never stacks a second anti-join under a reader
+  * that applies deletes itself; the subtree this rule produces embeds
   * the same (now-tagged) relation node, so the fixed-point analyzer batch
   * terminates after one application. Output attribute ids are preserved
   * via an aliasing Project, so parent operators resolve untouched.
@@ -35,7 +36,7 @@ final class IceDvOverlay(spark: SparkSession) extends Rule[LogicalPlan] {
       val idx = lr.relation.asInstanceOf[HadoopFsRelation]
         .location.asInstanceOf[IceFileIndex]
       val base = PlanBridge.ofRows(spark, lr)
-      val overlaid = IceFileIndex.overlayDeletes(idx.table, idx.snap, base)
+      val overlaid = idx.table.withDeletesApplied(base, idx.markers, idx.asOf)
       if (overlaid eq base) lr // no dv table: keep the bare relation
       else {
         val analyzed = overlaid.queryExecution.analyzed

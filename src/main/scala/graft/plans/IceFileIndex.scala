@@ -10,47 +10,70 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{NumericType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A Catalyst [[FileIndex]] backed by an ice snapshot: the table becomes a
-  * first-class catalog relation whose Hive-style partition keys (parsed
-  * from `_data/{k=v/...}/uuid.parquet` marker paths) are *real queryable
-  * columns*, and `WHERE` clauses on them prune files inside the optimizer
-  * (`PartitionFilters` in the plan) — no files are even listed for pruned
-  * partitions. This is the catalog-integrated complement to
-  * `IceTable.readPartitionRange` (A18) and subsumes the reference's
-  * `get_files` UDF / parameterized-view integrations
-  * (ch/user_scripts/main.go:44-73, examples/segment-webhook-sink.py:84-90 —
-  * B21/B22): instead of splicing file lists into SQL text, the resolver IS
-  * the table.
+/** The one Catalyst [[FileIndex]] every ice scan plans through: a marker
+  * list from the log, never a directory glob.
   *
-  * The snapshot is pinned at construction — MVCC isolation holds for the
-  * lifetime of the DataFrame, exactly like the explicit-file-list path.
-  */
+  *  - The catalog relation ([[IceFileIndex.relationFor]]) passes a
+  *    snapshot's alive files and its Hive-style partition keys (parsed
+  *    from `_data/{k=v/...}/uuid.parquet` marker paths). The keys become
+  *    real queryable columns, and `WHERE` clauses on them prune files
+  *    inside the optimizer (`PartitionFilters` in the plan). This subsumes
+  *    the reference's `get_files` UDF / parameterized-view integrations
+  *    (ch/user_scripts/main.go:44-73, examples/segment-webhook-sink.py:84-90
+  *    — B21/B22): instead of splicing file lists into SQL text, the
+  *    resolver IS the table.
+  *  - Explicit reads ([[graft.ice.IceTable.scanMarkers]]) pass their own
+  *    marker list with an empty partition schema: one
+  *    [[PartitionDirectory]], and a relation schema that is exactly the
+  *    passed data schema.
+  *
+  * Neither lists a file. DataFrameReader resolves a multi-path read
+  * through InMemoryFileIndex, which above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (default 32)
+  * paths runs a DISTRIBUTED listing job with one task per path, and every
+  * one of those tasks re-deserializes the full Hadoop Configuration from
+  * the task binary (measured 15-20 ms CPU per task: ~35 CPU-s ahead of a
+  * 2000-file compaction scan, an 83-task job ahead of every query on the
+  * 83-partition lineitem fixture). The log already records every path
+  * and exact byte size at commit time (`FileMarker.fileBytes` =
+  * `getFileStatus(dest).getLen`), so this index serves the plan straight
+  * from the markers; at object-store scale that replaces per-file
+  * HEAD/LIST round-trips with zero I/O.
+  *
+  * Deletion vectors: catalog relations are overlaid by the
+  * [[IceDvOverlay]] rule, pinned at `asOf`. Explicit scans arrive already
+  * tagged [[IceDvOverlay.DvApplied]]: they are DV-blind by contract, and
+  * the readers that need deletes applied do it themselves.
+  *
+  * The marker list is pinned at construction — MVCC isolation holds for
+  * the lifetime of the DataFrame. */
 final class IceFileIndex(
-    spark: SparkSession,
     val table: IceTable,
-    val snap: IceSnapshot,
-    val partitionSchema: StructType) extends FileIndex {
+    val markers: Seq[FileMarker],
+    dataSchema: StructType,
+    override val partitionSchema: StructType,
+    val asOf: Long = Long.MaxValue) extends FileIndex {
 
-  /** partition string → (values row, markers + file statuses), built once
-    * driver-side from the marker list (metadata-scale: no FS listing). */
-  private lazy val partitions: Seq[(InternalRow, Seq[(FileMarker, FileStatus)])] = {
-    snap.aliveFiles
+  /** partition values row → markers, built once driver-side. */
+  private lazy val partitions: Seq[(InternalRow, Seq[FileMarker])] =
+    if (partitionSchema.isEmpty) Seq(InternalRow.empty -> markers)
+    else markers
       .groupBy(m => table.partitionOf(m.path))
       .toSeq.sortBy(_._1)
-      .map { case (part, markers) =>
+      .map { case (part, ms) =>
         val kv = IceTable.partitionKvOf(part) // THE shared k=v semantics
-        val row = InternalRow.fromSeq(partitionSchema.map(f =>
-          UTF8String.fromString(kv.getOrElse(f.name, ""))))
-        // sizes come from the log markers — no S3 HEAD/LIST needed.
-        // Paths are FS-QUALIFIED (scheme + authority) so `_metadata
-        // .file_path` carries the same prefix as every other scan — the
-        // deletion-vector overlay strips `table.qualifiedRoot` off it
-        val files = markers.map(m => m -> new FileStatus(
-          m.fileBytes, false, 1, 128L * 1024 * 1024, m.createdMs,
-          new Path(table.qualifiedRoot + "/" + m.path)))
-        (row, files)
+        InternalRow.fromSeq(partitionSchema.map(f =>
+          UTF8String.fromString(kv.getOrElse(f.name, "")))) -> ms
       }
-  }
+
+  // sizes come from the log markers — no S3 HEAD/LIST needed. Paths are
+  // FS-QUALIFIED (scheme + authority) so `_metadata.file_path` carries the
+  // same prefix as every other scan — the deletion-vector anti-join strips
+  // `table.qualifiedRoot` off it
+  private def statusOf(m: FileMarker): FileStatusWithMetadata =
+    FileStatusWithMetadata(new FileStatus(
+      m.fileBytes, false, 1, 128L * 1024 * 1024, m.createdMs,
+      new Path(table.qualifiedRoot + "/" + m.path)))
 
   // ------------------------------------------------- stats-based skipping
   //
@@ -58,16 +81,13 @@ final class IceFileIndex(
   // dataFilters; when the table records log-side [min, max] stats for a
   // column, simple comparisons against it turn into a conservative
   // [lo, hi] window and files whose stats interval cannot intersect it are
-  // never listed — the SQL-path twin of IceTable.readStatsRange, still
-  // with zero plan-time object-store reads.
+  // never listed (IceTable.filesMatchingStats), still with zero plan-time
+  // object-store reads.
 
   private val statsCols: Seq[String] =
     (table.cfg.statsColumn.toSeq ++ table.cfg.statsColumns).distinct
-  private val statsNumeric: Map[String, Boolean] = {
-    val types = snap.schema.pairs.toMap
-    statsCols.map(c =>
-      c -> types.get(c).exists(IceTable.statsTypeIsNumeric)).toMap
-  }
+  private val statsNumeric: Map[String, Boolean] =
+    statsCols.map(c => c -> IceTable.statsNumeric(dataSchema, c)).toMap
 
   /** Conservative per-column [lo, hi] windows for every stats column, from
     * conjunctive comparison filters; anything unrecognized just widens.
@@ -163,16 +183,7 @@ final class IceFileIndex(
     (lo.keySet ++ hi.keySet).map(c => c -> (lo.get(c), hi.get(c))).toMap
   }
 
-  private def statsKeep(
-      m: FileMarker,
-      windows: Map[String, (Option[String], Option[String])]): Boolean =
-    windows.forall { case (c, (lo, hi)) =>
-      table.markerStats(m, c).forall { case (mn, mx) =>
-        IceTable.statsIntersects(statsNumeric(c), mn, mx, lo, hi)
-      }
-    }
-
-  override def rootPaths: Seq[Path] = Seq(new Path(table.root))
+  override def rootPaths: Seq[Path] = Seq(new Path(table.qualifiedRoot))
 
   override def listFiles(
       partitionFilters: Seq[Expression],
@@ -189,47 +200,38 @@ final class IceFileIndex(
       partitions.filter { case (row, _) => predicate.eval(row) }
     }
     val windows = statsWindows(dataFilters)
-    pruned.map { case (row, files) =>
-      val kept =
-        if (windows.isEmpty) files
-        else files.filter { case (m, _) => statsKeep(m, windows) }
-      PartitionDirectory(row, kept.map(f => FileStatusWithMetadata(f._2)))
+    pruned.map { case (row, ms) =>
+      PartitionDirectory(row,
+        table.filesMatchingStats(ms, dataSchema, windows).map(statusOf))
     }
   }
 
   override def inputFiles: Array[String] =
-    snap.aliveFiles.map(m => s"${table.root}/${m.path}").toArray
+    markers.map(m => s"${table.qualifiedRoot}/${m.path}").toArray
 
   override def refresh(): Unit = ()
 
-  override def sizeInBytes: Long = snap.aliveFiles.map(_.fileBytes).sum
+  override def sizeInBytes: Long = markers.map(_.fileBytes).sum
 
-  /** Sum of the alive files' recorded physical row counts, defined only
-    * when EVERY alive marker carries one — the metadata-only `count(*)`
-    * input ([[org.apache.spark.sql.graft.MetadataOnlyCount]]). A single
-    * rc-less file (reference-written log, pre-field history) disables
-    * the fast path rather than corrupting it; an empty snapshot is a
-    * legitimate zero. */
-  def metadataRowCount: Option[Long] = {
-    val fs = snap.aliveFiles
-    if (fs.forall(_.rowCount.isDefined)) Some(fs.iterator.flatMap(_.rowCount).sum)
+  /** Sum of the markers' recorded physical row counts, defined only when
+    * EVERY marker carries one — the metadata-only `count(*)` input
+    * ([[org.apache.spark.sql.graft.MetadataOnlyCount]]). A single rc-less
+    * file (reference-written log, pre-field history) disables the fast
+    * path rather than corrupting it; an empty list is a legitimate zero. */
+  def metadataRowCount: Option[Long] =
+    if (markers.forall(_.rowCount.isDefined)) Some(markers.iterator.flatMap(_.rowCount).sum)
     else None
-  }
 
-  /** Numeric-compared (min, max) of `colName` across the alive files'
-    * footer stats markers, defined iff EVERY alive file records stats for
-    * that column (a file whose rows are all-null there records none —
-    * blocking is the conservative, correct answer; footer min/max skip
-    * nulls exactly like SQL `min`/`max`). Values returned as the stored
-    * strings; the caller owns typed reconstruction. Empty snapshot →
-    * None (SQL yields NULL there — let the scan say so). */
+  /** Numeric-compared (min, max) of `colName` across the markers' footer
+    * stats, defined iff EVERY marker records stats for that column (a
+    * file whose rows are all-null there records none — blocking is the
+    * conservative, correct answer; footer min/max skip nulls exactly like
+    * SQL `min`/`max`). Values returned as the stored strings; the caller
+    * owns typed reconstruction. No markers → None (SQL yields NULL there
+    * — let the scan say so). */
   def metadataMinMax(colName: String): Option[(String, String)] = {
-    val fs = snap.aliveFiles
-    if (fs.isEmpty) return None
-    def statOf(m: graft.ice.FileMarker): Option[(String, String)] =
-      if (table.cfg.statsColumn.contains(colName)) m.stats
-      else m.multiStats.get(colName)
-    val all = fs.map(statOf)
+    if (markers.isEmpty) return None
+    val all = markers.map(table.markerStats(_, colName))
     if (all.exists(_.isEmpty)) return None
     try {
       val parsed = all.flatten.map { case (mn, mx) =>
@@ -238,46 +240,6 @@ final class IceFileIndex(
       Some((parsed.minBy(_._1._1)._1._2, parsed.maxBy(_._2._1)._2._2))
     } catch { case _: NumberFormatException => None }
   }
-}
-
-/** Zero-listing [[FileIndex]] over an EXPLICIT marker list: the planner
-  * twin of `spark.read.schema(s).parquet(paths: _*)` minus the listing.
-  * DataFrameReader resolves a multi-path read through InMemoryFileIndex,
-  * which above `spark.sql.sources.parallelPartitionDiscovery.threshold`
-  * (default 32) paths runs a DISTRIBUTED listing job with one task per
-  * path — and every one of those tasks re-deserializes the full Hadoop
-  * Configuration from the task binary (gzip-per-entry: measured 15-20 ms
-  * CPU per task, ~35 CPU-s ahead of a 2000-file compaction scan, an
-  * 83-task job ahead of every query on the 83-partition lineitem
-  * fixture). The log already records every path and exact byte size at
-  * commit time (`FileMarker.fileBytes` = `getFileStatus(dest).getLen`),
-  * so the listing discovers nothing — this index serves the plan straight
-  * from the markers, the same trust [[IceFileIndex]] (the catalog
-  * relation) has always placed in them. At object-store scale the same
-  * construction replaces per-file HEAD/LIST round-trips with zero I/O.
-  *
-  * No partition columns: the relation's schema is exactly the passed
-  * dataSchema, matching the explicit-file-list read contract
-  * ([[graft.ice.IceTable.readFiles]]); partition values stay derivable
-  * from the path. Deliberately NOT an [[IceFileIndex]] subclass: the
-  * [[IceDvOverlay]] rule keys on that type, and explicit-list readers
-  * apply deletion vectors themselves. */
-final class MarkerFileIndex(
-    qualifiedRoot: String,
-    markers: Seq[FileMarker]) extends FileIndex {
-  private lazy val dir = PartitionDirectory(InternalRow.empty,
-    markers.map(m => FileStatusWithMetadata(new FileStatus(
-      m.fileBytes, false, 1, 128L * 1024 * 1024, m.createdMs,
-      new Path(qualifiedRoot + "/" + m.path)))))
-  override def rootPaths: Seq[Path] = Seq(new Path(qualifiedRoot))
-  override def listFiles(
-      partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = Seq(dir)
-  override def inputFiles: Array[String] =
-    markers.map(m => s"$qualifiedRoot/${m.path}").toArray
-  override def refresh(): Unit = ()
-  override def sizeInBytes: Long = markers.map(_.fileBytes).sum
-  override def partitionSchema: StructType = StructType(Nil)
 }
 
 object IceFileIndex {
@@ -313,11 +275,12 @@ object IceFileIndex {
       snap: IceSnapshot): HadoopFsRelation = {
     val pSchema = StructType(partitionKeys(table, snap)
       .map(StructField(_, StringType, nullable = true)))
-    val index = new IceFileIndex(spark, table, snap, pSchema)
+    val dataSchema = snap.schema.toStructType
     HadoopFsRelation(
-      location = index,
+      location = new IceFileIndex(
+        table, snap.aliveFiles, dataSchema, pSchema, snap.timestamp),
       partitionSchema = pSchema,
-      dataSchema = snap.schema.toStructType,
+      dataSchema = dataSchema,
       // co-located joins/aggs on the bucket columns plan WITHOUT an
       // exchange when the table is bucketed (see IceTableConfig.bucketBy)
       bucketSpec = table.bucketSpecFor(snap),
@@ -380,26 +343,8 @@ object IceFileIndex {
     // Only sessions WITHOUT the extension need the inline overlay.
     val ruleActive = spark.sessionState.analyzer.extendedResolutionRules
       .exists(_.isInstanceOf[IceDvOverlay])
-    if (ruleActive) df else overlayDeletes(table, snap, df)
+    if (ruleActive) df else table.withDeletesApplied(df, snap.aliveFiles, snap.timestamp)
   }
-
-  /** LEFT ANTI-join `df` (a scan of `snap`'s files) against the table's
-    * deletion-vector positions pinned at the same snapshot time; identity
-    * when no dv table exists. The dv side is position-pair sized so AQE
-    * broadcasts it on its own — and a pathological dv is still allowed to
-    * sort-merge instead of OOMing. */
-  private[plans] def overlayDeletes(
-      table: IceTable, snap: IceSnapshot, df: DataFrame): DataFrame =
-    table.dvPositions(snap.aliveFiles.map(_.path), snap.timestamp) match {
-      case None => df
-      case Some(del) =>
-        val cols = df.columns.map(org.apache.spark.sql.functions.col).toSeq
-        df.withColumn("_dv_path", table.relPathCol)
-          .withColumn("_dv_row",
-            org.apache.spark.sql.functions.col("_metadata.row_index"))
-          .join(del, Seq("_dv_path", "_dv_row"), "left_anti")
-          .select(cols: _*)
-    }
 
   /** Register the snapshot as a temp view: `spark.sql("... FROM name WHERE
     * d = '2024-01-01'")` prunes partitions in the optimizer (B21: the

@@ -19,16 +19,7 @@ class PlanAuditSpec extends SparkSpec {
   }
   private def scansOf(df: DataFrame): Seq[FileSourceScanExec] = {
     df.collect()
-    def all(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-      p match {
-        case a: AdaptiveSparkPlanExec => all(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => all(q.plan)
-        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => all(r.child)
-        case s: FileSourceScanExec => Seq(s)
-        case other => other.children.flatMap(all) ++
-          other.subqueries.flatMap(all)
-      }
-    all(df.queryExecution.executedPlan)
+    graft.plans.PlanScans.fileScans(df)
   }
 
   test("b5: predicates push down to the parquet scan; columns pruned") {

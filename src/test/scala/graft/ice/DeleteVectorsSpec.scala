@@ -35,6 +35,8 @@ class DeleteVectorsSpec extends SparkSpec {
     assert(t.read().count() == 720)
     assert(t.readFiles(t.snapshot(), t.snapshot().aliveFiles).count() == 800,
       "raw marker-subset read stays dv-blind by contract")
+    assert(t.readAdded(0L).where(col("id") % 10 === 3).count() == 80,
+      "the insert changelog stays dv-blind by contract")
     // merge-on-read excludes exactly the marked rows
     val r = DeleteVectors.read(t)
     assert(r.count() == 720)

@@ -76,6 +76,14 @@ class IceFileIndexSpec extends SparkSpec {
     // v∈[30,60] intersects only [25,49] and [50,74] — 2 of 4 files listed,
     // from the log's marker stats, with zero plan-time file reads
     assert(selected.length == 2, s"expected 2 files, got ${selected.length}")
+    // the explicit read plans through the same index: same files kept
+    def planned(df: org.apache.spark.sql.DataFrame): Int =
+      PlanScans.fileScans(df).map(s =>
+        s.relation.location.listFiles(s.partitionFilters, s.dataFilters)
+          .flatMap(_.files).length).sum
+    val explicit = table.read().where(col("v").between(30, 60))
+    assert(explicit.count() == 31L)
+    assert(planned(explicit) == planned(q))
   }
 
   private def scanOf(q: org.apache.spark.sql.DataFrame) = {
